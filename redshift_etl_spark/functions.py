@@ -1,5 +1,8 @@
 """Scalar function layer — the reference's entire scalar surface
-(SURVEY §2.6 F1–F17) as composable Column functions.
+(SURVEY §2.6 F1–F17) as composable Column functions. The date parts
+(F1/F2) and the audit ``now`` (F17) are plain Spark built-ins
+(``F.to_date``, ``F.month``, ``F.current_timestamp``, ...) and get no
+wrapper here.
 
 Every one of these compiles to built-in Catalyst expressions (JVM-side,
 whole-stage-codegen'd). No Python UDFs anywhere — the reference's custom
@@ -21,25 +24,6 @@ TRUTHY = ("t", "T", "True", "true", "1")
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
-
-
-# --- F1/F2: date parts -----------------------------------------------------
-
-def date_of(col: Column | str) -> Column:
-    """CAST(ts AS DATE) — `view_agent_metrics.sql:3`."""
-    return F.to_date(_c(col))
-
-
-def month_of(col: Column | str) -> Column:
-    return F.month(_c(col)).cast("long")
-
-
-def day_of(col: Column | str) -> Column:
-    return F.dayofmonth(_c(col)).cast("long")
-
-
-def hour_of(col: Column | str) -> Column:
-    return F.hour(_c(col)).cast("long")
 
 
 # --- F3/F16: epoch difference ---------------------------------------------

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from .similarity import _as_double, dot
 
 SCALE = 10**6
+NULL_OR_NAN = "pq: vector is null or has a null or NaN element"
 
 
 def _dot_scaled(a, b):
@@ -47,24 +48,35 @@ def _subspaces(
 ) -> DataFrame:
     """(vid, s, sv): each vector exploded into its m subvectors.
 
-    Guarded: a vector whose length ≠ m·d raises at execution instead of
-    silently yielding empty subvectors (which would tie every argmax
-    and corrupt codes). The guard rides the first slice expression —
-    per-row comparison, no extra job."""
+    Guarded: a null vector, a null or NaN element, or a length ≠ m·d
+    raises at execution instead of silently yielding empty or NaN
+    subvectors (which would tie every argmax and corrupt codes). The
+    guard rides the first slice expression — per-row comparison, no
+    extra job. ``array_contains`` is NULL for a null array and for a
+    NaN-free array holding a null, and Spark compares NaN equal to NaN."""
     v = _as_double(F.col(vec_col))
+    bad_value = F.coalesce(
+        F.array_contains(v, F.lit(float("nan"))), F.lit(True)
+    )
 
     def _slice(s: int):
         sl = F.slice(v, s * d + 1, d)
         if s == 0:
-            return F.when(F.size(v) == m * d, sl).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            f"pq: vector length must be m*d = {m * d}, got "
-                        ),
-                        F.size(v).cast("string"),
-                    )
+            return (
+                F.when(bad_value, F.raise_error(F.lit(NULL_OR_NAN)))
+                .when(
+                    F.size(v) != m * d,
+                    F.raise_error(
+                        F.concat(
+                            F.lit(
+                                f"pq: vector length must be m*d = {m * d}, "
+                                "got "
+                            ),
+                            F.size(v).cast("string"),
+                        )
+                    ),
                 )
+                .otherwise(sl)
             )
         return sl
 
@@ -199,7 +211,13 @@ def pq_encode_arrow(
       java.math.RoundingMode.HALF_UP on the same value;
     - ties break to the lowest cent_id: centroids are sorted by id
       ascending and np.argmax returns the FIRST maximum.
-    The id column keeps its input dtype (the r13 string-id lesson)."""
+    The id column keeps its input dtype (the r13 string-id lesson).
+
+    The codebook collect is eager: the call itself runs one Spark job
+    that brings the m·k codebook rows to the driver, before the returned
+    frame is used. A codebook without centroids for some subspace
+    s < m raises ValueError here; a null vector or a null or NaN element
+    raises the expression form's error when the frame runs."""
     import numpy as np
     import pandas as pd
 
@@ -208,6 +226,12 @@ def pq_encode_arrow(
     for r in rows:
         by_s.setdefault(int(r["s"]), []).append(
             (int(r["cent_id"]), list(r["cv"]))
+        )
+    missing = [s for s in range(m) if s not in by_s]
+    if missing:
+        raise ValueError(
+            f"pq: codebook has no centroids for subspace s = "
+            f"{', '.join(map(str, missing))} (m = {m})"
         )
     mats = {}
     for s, cents in by_s.items():
@@ -232,12 +256,16 @@ def pq_encode_arrow(
             n = len(pdf)
             if n == 0:
                 continue
+            if pdf["__v"].isna().any():
+                raise ValueError(NULL_OR_NAN)
             V = np.array(pdf["__v"].tolist(), dtype=np.float64)
             if V.shape[1] != m * d:
                 raise ValueError(
                     f"pq: vector length must be m*d = {m * d}, got "
                     f"{V.shape[1]}"
                 )
+            if np.isnan(V).any():  # NaN, or null, elements
+                raise ValueError(NULL_OR_NAN)
             parts = []
             for s in range(m):
                 ids, mat = mats[s]

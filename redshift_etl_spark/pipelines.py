@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Sequence
 from datetime import datetime, timedelta
-from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -160,8 +159,3 @@ def goals_upsert(
     return M.upsert_if_changed(
         target, staged, list(S.GOALS.key), compare_cols=["goal"]
     )
-
-
-def now_ny() -> datetime:
-    """F17 — current NY-local timestamp for audit columns."""
-    return datetime.now(ZoneInfo("America/New_York")).replace(tzinfo=None)

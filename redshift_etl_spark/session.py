@@ -10,6 +10,37 @@ The reference pins America/New_York local-naive timestamps
 (`Amazon Connect/connect_agent_metrics.py:94-95`); the engine treats the
 zone as configuration — pass ``timezone="America/New_York"`` for
 reference-parity pipelines, keep UTC for oracle comparison.
+
+Streaming checkpoints go through Spark's ``FileSystemBasedCheckpointFileManager``
+instead of the default ``FileContextBasedCheckpointFileManager``. Every
+engine stream writes its offset log, commit log and state-store deltas
+through this manager: per micro-batch one offset file, one commit file
+and one delta (plus its checksum sidecar) per state partition. The
+default renames each file through Hadoop ``FileContext``, whose
+``AbstractFileSystem.renameInternal`` asks ``getFileLinkStatus`` of the
+source and the destination; on the local filesystem Hadoop 3.4's
+``RawLocalFileSystem`` answers that with ``FileUtil.readLink``, which
+forks a ``readlink`` process every time, native library or not. The
+FileSystem manager renames with ``FileSystem.rename`` and forks nothing
+for it. Batch jobs never create a checkpoint manager, so only streams see
+the change.
+
+Create-if-absent stays as atomic as before, store by store:
+
+- Local filesystem: FileContext's no-overwrite rename is itself
+  check-then-rename (``getFileLinkStatus(dst)``, then
+  ``renameInternal(src, dst)``), the same guarantee as the FileSystem
+  manager's ``exists(dst)`` followed by ``rename(src, dst)``. Both
+  refuse a destination that exists at the check; neither closes the
+  window between check and rename, since POSIX ``rename`` overwrites.
+- HDFS: ``DistributedFileSystem.rename`` refuses an existing destination
+  on the NameNode, so the rename that publishes a batch's file cannot
+  replace a concurrent writer's.
+- Other stores (S3A, ABFS, GCS, ...): unverified. Spark falls back to
+  this same manager wherever FileContext is unavailable and warns that
+  correctness then rests on ``FileSystem.rename`` being atomic; a store
+  without that guarantee needs its own manager, set through
+  ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -19,6 +50,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -50,6 +85,11 @@ def get_spark(
         # (queries/tables.py) — truncation to micros matches DuckDB.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # no readlink fork per checkpoint file (module docstring)
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     if extra_conf:

@@ -87,35 +87,127 @@ def test_changed_or_new_filter(spark):
     assert _as_set(out) == {("b", "newer", 7), ("c", "new", 1)}
 
 
+# merge_scd1 switches its change detection above 24 columns; these widths
+# sit on both sides of that gate and at the reference's widest merge.
+WIDTHS = (6, 24, 25, 250)
+
+
+def _wide_df(spark, rows, width):
+    """(id, val, lmd-day) rows padded to ``width`` columns; day None is a
+    null recency. The pads copy ``val``, so they never settle a tie that
+    ``val`` leaves open."""
+    pads = [f"p{j:03d}" for j in range(width - 3)]
+    schema = SCHEMA + "".join(f", {p} string" for p in pads)
+    data = [
+        (k, v, None if d is None else datetime(2024, 1, d), *[v] * len(pads))
+        for k, v, d in rows
+    ]
+    return spark.createDataFrame(data, schema)
+
+
+def _rows_key(row):
+    k, v, d = row
+    return k, v, -1 if d is None else d
+
+
+def _merged_rows(spark, tgt, src, width):
+    """merge_scd1 at ``width`` as a sorted (id, val, day) list, after
+    checking the gate picked the branch its width calls for and every pad
+    still carries its row's ``val``."""
+    out = M.merge_scd1(
+        _wide_df(spark, tgt, width), _wide_df(spark, src, width), "id", "lmd"
+    )
+    plan = out._jdf.queryExecution().logical().toString()
+    assert ("__tgt_min" in plan) == (width > 24)
+    rows = out.collect()
+    pads = [c for c in out.columns if c.startswith("p")]
+    assert all(r[p] == r["val"] for r in rows for p in pads)
+    return sorted(
+        ((r["id"], r["val"], r["lmd"] and r["lmd"].day) for r in rows),
+        key=_rows_key,
+    )
+
+
+def _scd1_model(tgt, src):
+    """Reference SCD1 over (key, val, day) rows, day None a null recency.
+    The newest source row per key wins (null recencies last, ties to the
+    larger val). It replaces every target row of its key when it is
+    strictly newer than at least one of them, and appears once per such
+    row: the merge joins the winner to each target row of its key. A key
+    new to the target is inserted, whatever its recency."""
+    best: dict[str, tuple] = {}
+    for k, v, d in src:
+        rank = (d is not None, d or 0, v)
+        if k not in best or rank > best[k][0]:
+            best[k] = (rank, (k, v, d))
+    out = []
+    for k in {k for k, _, _ in tgt} | set(best):
+        rows = [t for t in tgt if t[0] == k]
+        if k not in best:
+            out += rows
+            continue
+        win = best[k][1]
+        if not rows:
+            out.append(win)
+            continue
+        newer = [
+            t for t in rows
+            if win[2] is not None and t[2] is not None and win[2] > t[2]
+        ]
+        out += [win] * len(newer) if newer else rows
+    return sorted(out, key=_rows_key)
+
+
+# duplicate target keys (a, d) and null recencies on both sides
+_EDGE_TGT = [
+    ("a", "t1", 1), ("a", "t5", 5), ("b", "tN", None), ("c", "t3", 3),
+    ("d", "t2", 2), ("d", "tN", None),
+]
+_EDGE_SRC = [
+    ("a", "s4", 4), ("a", "s2", 2), ("b", "s9", 9), ("c", "s3", 3),
+    ("c", "s9", None), ("d", "s7", 7), ("d", "s8", 7), ("e", "sN", None),
+    ("e", "s1", None),
+]
+_EDGE_OUT = [
+    ("a", "s4", 4),     # newer than a's day-1 row: both target rows go
+    ("b", "tN", None),  # nothing is newer than a null target recency
+    ("c", "t3", 3),     # equal recency keeps the target; null src loses
+    ("d", "s8", 7),     # val breaks the day-7 tie; supersedes day 2 once
+    ("e", "sN", None),  # new key with only null recencies still inserts
+]
+
+
+def test_scd1_reference_model_edge_cases():
+    assert _scd1_model(_EDGE_TGT, _EDGE_SRC) == _EDGE_OUT
+
+
+@pytest.mark.parametrize("width", WIDTHS)
+def test_scd1_edge_cases_on_both_sides_of_width_gate(spark, width):
+    assert _merged_rows(spark, _EDGE_TGT, _EDGE_SRC, width) == _EDGE_OUT
+
+
+_DAY = st.one_of(st.none(), st.integers(1, 9))
+
+
 @pytest.mark.slow
+@pytest.mark.parametrize("width", WIDTHS)
 @settings(max_examples=10, deadline=None)
 @given(
     tgt=st.lists(
-        st.tuples(st.sampled_from("abcd"), st.integers(1, 9)), max_size=6
+        st.tuples(st.sampled_from("abcd"), st.integers(0, 9), _DAY),
+        max_size=6,
     ),
     src=st.lists(
-        st.tuples(st.sampled_from("abcd"), st.integers(1, 9)), max_size=6
+        st.tuples(st.sampled_from("abcd"), st.integers(0, 9), _DAY),
+        max_size=6,
     ),
 )
-def test_scd1_matches_reference_model(spark, tgt, src):
-    """Property: merge == per-key argmax over (recency, source-wins-only-
-    if-strictly-newer), computed by a trivial Python model."""
-    tgt = [(k, f"t{d}", d) for k, d in {k: d for k, d in tgt}.items()]
-    src = [(k, f"s{d}", d) for k, d in src]
-    out = M.merge_scd1(_df(spark, tgt), _df(spark, src), "id", "lmd")
-
-    model: dict[str, tuple[str, int]] = {}
-    best_src: dict[str, tuple[str, int]] = {}
-    for k, v, d in src:  # newest source row per key; tie → larger val wins
-        cur = best_src.get(k)
-        if cur is None or (d, v) > (cur[1], cur[0]):
-            best_src[k] = (v, d)
-    for k, v, d in tgt:
-        model[k] = (v, d)
-    for k, (v, d) in best_src.items():
-        if k not in model or d > model[k][1]:
-            model[k] = (v, d)
-    assert _as_set(out) == {(k, v, d) for k, (v, d) in model.items()}
+def test_scd1_matches_reference_model(spark, width, tgt, src):
+    """Property: merge == the reference model, with duplicate target
+    keys and null recencies, at every width of the gate."""
+    tgt = [(k, f"t{tag}", d) for k, tag, d in tgt]
+    src = [(k, f"s{tag}", d) for k, tag, d in src]
+    assert _merged_rows(spark, tgt, src, width) == _scd1_model(tgt, src)
 
 
 def _scd2_frames(spark):

@@ -4,6 +4,7 @@ partitioning invariance, and ADC ranking quality vs exact dot."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from redshift_etl_spark.operators import pq as PQ
 from redshift_etl_spark.queries.tables import load
@@ -159,3 +160,38 @@ def test_pq_encode_arrow_rejects_bad_length(spark):
     cb = PQ.pq_codebooks(_emb(spark))
     with pytest.raises(Exception, match="m\\*d"):
         PQ.pq_encode_arrow(emb, cb).collect()
+
+
+def _tiny_codebook(spark, subspaces=(0, 1)):
+    """Two centroids per subspace for m=2, d=8 vectors."""
+    return spark.createDataFrame(
+        [(s, c, [float(c)] * 8) for s in subspaces for c in (1, 2)],
+        "s int, cent_id long, cv array<double>",
+    )
+
+
+def test_pq_encode_arrow_names_missing_codebook_subspace(spark):
+    emb = spark.createDataFrame(
+        [(1, [0.5] * 16)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match=r"no centroids for subspace s = 1 "):
+        PQ.pq_encode_arrow(emb, _tiny_codebook(spark, (0,)), m=2, d=8)
+
+
+@pytest.mark.parametrize("encode", [PQ.pq_encode, PQ.pq_encode_arrow])
+def test_encode_rejects_null_vector(spark, encode):
+    emb = spark.createDataFrame(
+        [(1, [0.5] * 16), (2, None)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match=PQ.NULL_OR_NAN):
+        encode(emb, _tiny_codebook(spark), m=2, d=8).collect()
+
+
+@pytest.mark.parametrize("encode", [PQ.pq_encode, PQ.pq_encode_arrow])
+def test_encode_rejects_nan_vector(spark, encode):
+    emb = spark.createDataFrame(
+        [(1, [0.5] * 16), (2, [0.5] * 15 + [float("nan")])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match=PQ.NULL_OR_NAN):
+        encode(emb, _tiny_codebook(spark), m=2, d=8).collect()
